@@ -472,7 +472,6 @@ def _field_arrays(
 def tokenize(
     documents: DataFrame,
     cfg: IndexConfig | None = None,
-    field_codes: bool = False,
 ) -> DataFrame:
     """documents → (doc_id, field, term, tf, dl).
 
@@ -482,13 +481,6 @@ def tokenize(
     token count in that field) rides along so downstream BM25 stages
     never join a separate doc-length table — one fewer wide shuffle
     in the index build.
-
-    ``field_codes=True`` (the index-build fast path): the field
-    column is emitted as ``fcode`` — the field's int position in
-    ``cfg.fields`` — instead of the field-name string. The Arrow→JVM
-    boundary then converts a constant int column instead of tens of
-    millions of UTF8 strings, and ``build_postings`` consumes the
-    code directly (its shuffle carries fcode anyway).
     """
     import pyarrow as pa
 
@@ -508,7 +500,7 @@ def tokenize(
 
     out_fields = [
         ("doc_id", pa.int64()),
-        ("fcode", pa.int32()) if field_codes else ("field", pa.string()),
+        ("field", pa.string()),
         ("term", pa.string()), ("tf", pa.int32()), ("dl", pa.int32()),
     ]
     if positional:
@@ -538,17 +530,12 @@ def tokenize(
                 tf, dl_rows, cpos = r["tf"], r["dl"], r["cpos"]
                 n = len(pos)
                 vocab_arr = pa.array(vocab, type=pa.string())
-                field_arr = (
-                    pa.array(np.full(n, fi, dtype=np.int32))
-                    if field_codes
-                    else pa.compute.take(
-                        pa.array([fname], type=pa.string()),
-                        pa.array(np.zeros(n, dtype=np.int32)),
-                    )
-                )
                 arrays = [
                     pa.array(doc_ids[pos], type=pa.int64()),
-                    field_arr,
+                    pa.compute.take(
+                        pa.array([fname], type=pa.string()),
+                        pa.array(np.zeros(n, dtype=np.int32)),
+                    ),
                     pa.compute.take(vocab_arr, pa.array(codes)),
                     pa.array(tf.astype(np.int32)),
                     pa.array(dl_rows),
@@ -559,6 +546,4 @@ def tokenize(
                 yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     schema = TOKENS_SCHEMA_POS if positional else TOKENS_SCHEMA
-    if field_codes:
-        schema = schema.replace("field string", "fcode int")
     return documents.select(*cols).mapInArrow(run, schema=schema)

@@ -2,37 +2,47 @@
 Solr (GolrLoader.java:498-515 batches docs to an external indexer;
 here posting lists are built inside the engine).
 
+One builder, ``build_postings_packed``, serves every caller: the
+in-memory ``build_index``, the checkpointed build (plans.manifest),
+the streaming fold (streaming.incremental) and both upserts
+(plans.maintenance). Its plan is one linear job:
+
+  tokenize+pack (mapInArrow over documents)
+    → Exchange on a reduce-partition id (a few Arrow IPC blob rows
+      per map task, not one row per token)
+    → unpack + numpy lexsort + block encode (mapInArrow)
+
 Physical design (SURVEY.md §4.2):
 
 * **Doc-space range buckets as the salt.** ``bucket =
   shiftright(doc_id, 64 - bucket_bits)`` is a *monotone* function of
   doc_id, so per-``(term, field, bucket)`` posting blocks are globally
   doc_id-ordered across buckets while hot terms (``def``, ``return``)
-  fan out over ``2**bucket_bits`` independent reduce tasks instead of
-  one giant one. This is the skew treatment the north rule mandates —
-  range-salting rather than random-salting, because it buys global
-  order for free (no second merge pass).
+  fan out over ``2**bucket_bits`` independent groups instead of one
+  giant one — range-salting rather than random-salting, because it
+  buys global order for free (no second merge pass). Every
+  (term, field, bucket) group is routed whole to one reduce
+  partition, so the encoder never stitches a group across tasks.
 * **Self-contained postings.** Each posting stores ``(doc_id delta,
   tf, dl)`` varint streams — doc length rides with the posting (the
   Lucene-norms idea, but exact), so BM25 scoring never joins a
-  doc-norm table at query time. Storage trades ~1 varint per posting
-  for the removal of an N-row join at 10^12-doc scale.
+  doc-norm table at query time.
 * **Block-max metadata.** Per block: ``max_tf``, ``min_dl`` and
   ``tf_sum``. The query-time bound ``wt·max_tf/(max_tf +
   k1(1−b+b·min_dl/avgdl))`` upper-bounds every posting's contribution
   (the tf-normalization is monotone ↑tf, ↓dl), so block skipping stays
   admissible — and because the bound needs NO corpus statistic at
-  encode time, the whole build is ONE linear job: tokenize → one wide
-  shuffle → encode. No stats barrier, no tokens materialization.
+  encode time, there is no stats barrier and no token
+  materialization between tokenize and encode.
 * **Derived statistics.** ``avgdl`` (Σ tf_sum per field / n_docs) and
   ``term_stats`` (df = Σ n, cf = Σ tf_sum per term) are aggregations
   over the ~1000×-smaller block table, not second passes over tokens.
 * Postings are written range-partitioned + sorted by term so parquet
   row-group min/max stats prune query-term lookups at the scan.
 
-All heavy lifting is Catalyst (groupBy partial aggregation, AQE);
-Python appears once, in the Arrow-native block encoder (zero-copy
-ListArray buffers, loops only over term-groups, never posting rows).
+Python runs twice per build, both times over whole Arrow batches
+(the tokenizer kernel and the vectorized block encoder); no stage
+loops over posting rows in Python.
 """
 
 from __future__ import annotations
@@ -42,6 +52,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,7 +61,6 @@ from golr_loader_spark.functions.codec import (
     binary_from_segments as _binary_from_segments,
     varint_encode_with_sizes,
 )
-from golr_loader_spark.functions.tokenize import tokenize
 
 POSTINGS_SCHEMA = pa.schema(
     [
@@ -193,203 +203,112 @@ def _encode_groups(
     return pa.RecordBatch.from_arrays(arrays, schema=POSTINGS_SCHEMA)
 
 
-def _encode_batches(cfg: IndexConfig) -> "callable":
-    """Streaming flat-row block encoder for mapInArrow.
+def _encode_sorted(rb: pa.RecordBatch, cfg: IndexConfig) -> pa.RecordBatch:
+    """Sorted token rows → postings blocks.
 
-    Input batches are FLAT posting rows (term, fcode, doc_id, tf,
-    dl), hash-partitioned by (term, fcode, bucket-of(doc_id)) and
-    sorted by (term, fcode, doc_id) within the partition — ``fcode``
-    is the field's integer position in ``cfg.fields`` and the bucket
-    is NOT shipped: it is a monotone function of doc_id, so the
-    (term, fcode, doc_id) sort already yields contiguous
-    (term, field, bucket) runs, and the encoder re-derives it with
-    one vectorized shift (guide §2.3: shuffle keys, not derivable
-    metadata — dropping the field string + bucket int cut the wide
-    shuffle's row width by ~25%). Group boundaries are detected
-    vectorized; the (possibly incomplete) trailing group of each
-    batch is carried over and prepended to the next, so NO posting
-    list is ever materialized as a single row — the giant-row /
-    executor-OOM failure mode of collect_list on a hot term simply
-    cannot occur, at any scale."""
+    ``rb`` holds token rows (term, fcode, doc_id, tf, dl[, positions])
+    sorted by (term, fcode, doc_id), and every (term, fcode, bucket)
+    group in it is whole: the packed build hands over one sorted
+    reduce partition or one spill sub-bucket at a time, and a group
+    never spans either. ``fcode`` is the field's position in
+    ``cfg.fields``; the bucket is not shipped, because it is a
+    monotone function of doc_id — the sort already makes the
+    (term, field, bucket) runs contiguous and one vectorized shift
+    re-derives it here."""
     field_names = list(cfg.fields)
     shift = np.int64(max(0, cfg.id_space_bits - cfg.bucket_bits))
+    terms = rb.column(0)
+    fcodes = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+    ids = rb.column(2).to_numpy(zero_copy_only=False)
+    tfs = rb.column(3).to_numpy(zero_copy_only=False)
+    dls = rb.column(4).to_numpy(zero_copy_only=False)
+    # same arithmetic shift as bucket_of (monotone, sign-preserving)
+    buckets = np.right_shift(ids.astype(np.int64), shift).astype(np.int32)
+    pdata = psizes = None
+    if rb.num_columns > 5:
+        # positional: flat byte stream + per-row sizes straight from
+        # the Arrow binary buffers (no per-row objects)
+        pcol = rb.column(5)
+        pbufs = pcol.buffers()
+        poffs = np.frombuffer(pbufs[1], dtype=np.int32)[
+            pcol.offset : pcol.offset + len(pcol) + 1
+        ].astype(np.int64)
+        pdata = (
+            np.frombuffer(pbufs[2], dtype=np.uint8)[poffs[0] : poffs[-1]]
+            if pbufs[2] is not None
+            else np.empty(0, dtype=np.uint8)
+        )
+        psizes = np.diff(poffs)
 
-    def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pend: dict | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            terms = rb.column(0)
-            fcodes = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            ids = rb.column(2).to_numpy(zero_copy_only=False)
-            tfs = rb.column(3).to_numpy(zero_copy_only=False)
-            dls = rb.column(4).to_numpy(zero_copy_only=False)
-            # bucket re-derived from doc_id: same arithmetic shift as
-            # bucket_of (monotone, sign-preserving)
-            buckets = np.right_shift(ids.astype(np.int64), shift).astype(
-                np.int32
-            )
-            if rb.num_columns > 5:
-                # positional: flat byte stream + per-row sizes straight
-                # from the Arrow binary buffers (no per-row objects)
-                pcol = rb.column(5)
-                pbufs = pcol.buffers()
-                poffs = np.frombuffer(pbufs[1], dtype=np.int32)[
-                    pcol.offset : pcol.offset + len(pcol) + 1
-                ].astype(np.int64)
-                pdata = (
-                    np.frombuffer(pbufs[2], dtype=np.uint8)
-                    if pbufs[2] is not None
-                    else np.empty(0, dtype=np.uint8)
-                )
-                psizes = np.diff(poffs)
-            else:
-                poffs = pdata = psizes = None
-
-            # group keys without string compares: dictionary-encode
-            # terms (codes are appearance-ordered, fine — we only need
-            # equal-key runs and input is grouped); fcodes arrive as
-            # ints already.
-            tcodes = pa.compute.dictionary_encode(terms).indices.to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            bmin = np.int64(buckets.min())
-            brange = np.int64(buckets.max()) - bmin + 1
-            key = (tcodes * len(field_names) + fcodes) * brange + (
-                buckets.astype(np.int64) - bmin
-            )
-
-            if pend is not None:
-                # pending tail continues iff first key here equals its
-                # key fingerprint (same term/field/bucket values)
-                cont = (
-                    pend["term"] == terms[0].as_py()
-                    and pend["fcode"] == int(fcodes[0])
-                    and pend["bucket"] == int(buckets[0])
-                )
-                if cont:
-                    ne = key != key[0]
-                    head_len = int(np.argmax(ne)) if ne.any() else len(key)
-                    pend["ids"] = np.concatenate([pend["ids"], ids[:head_len]])
-                    pend["tfs"] = np.concatenate([pend["tfs"], tfs[:head_len]])
-                    pend["dls"] = np.concatenate([pend["dls"], dls[:head_len]])
-                    if psizes is not None:
-                        pend["pdata"] = np.concatenate(
-                            [pend["pdata"], pdata[poffs[0] : poffs[head_len]]]
-                        )
-                        pend["psizes"] = np.concatenate(
-                            [pend["psizes"], psizes[:head_len]]
-                        )
-                        poffs, psizes = poffs[head_len:], psizes[head_len:]
-                    terms, fcodes = terms[head_len:], fcodes[head_len:]
-                    buckets, ids = buckets[head_len:], ids[head_len:]
-                    tfs, dls, key = tfs[head_len:], dls[head_len:], key[head_len:]
-                    if len(ids) == 0:
-                        continue
-                out = _flush_pend(pend, cfg)
-                if out is not None:
-                    yield out
-                pend = None
-
-            # boundaries of sorted keys
-            change = np.flatnonzero(np.diff(key) != 0) + 1
-            offs = np.concatenate([[0], change, [len(key)]])
-            # last group → pend (may continue in the next batch)
-            last_lo = int(offs[-2])
-            pend = {
-                "term": terms[last_lo].as_py(),
-                "fcode": int(fcodes[last_lo]),
-                "field": field_names[int(fcodes[last_lo])],
-                "bucket": int(buckets[last_lo]),
-                "ids": ids[last_lo:].copy(),
-                "tfs": tfs[last_lo:].copy(),
-                "dls": dls[last_lo:].copy(),
-            }
-            if psizes is not None:
-                pend["pdata"] = pdata[poffs[last_lo] : poffs[-1]].copy()
-                pend["psizes"] = psizes[last_lo:].copy()
-            if len(offs) > 2:
-                g_starts = offs[:-2].astype(np.int64)
-                yield _encode_groups(
-                    terms.take(pa.array(g_starts)),
-                    pa.compute.take(
-                        pa.array(field_names, type=pa.string()),
-                        pa.array(fcodes[g_starts], type=pa.int64()),
-                    ),
-                    buckets[g_starts],
-                    offs[:-1] - 0,
-                    ids[:last_lo],
-                    tfs[:last_lo],
-                    dls[:last_lo],
-                    cfg,
-                    pos_data=(
-                        pdata[poffs[0] : poffs[last_lo]]
-                        if psizes is not None
-                        else None
-                    ),
-                    pos_sizes=psizes[:last_lo] if psizes is not None else None,
-                )
-        if pend is not None:
-            out = _flush_pend(pend, cfg)
-            if out is not None:
-                yield out
-
-    return encode
-
-
-def _flush_pend(pend: dict, cfg: IndexConfig):
-    if len(pend["ids"]) == 0:
-        return None
+    # group keys without string compares: dictionary codes are
+    # appearance-ordered, which is enough to find equal-key runs in
+    # grouped input
+    tcodes = pc.dictionary_encode(terms).indices.to_numpy(
+        zero_copy_only=False
+    ).astype(np.int64)
+    bmin = np.int64(buckets.min())
+    brange = np.int64(buckets.max()) - bmin + 1
+    key = (tcodes * len(field_names) + fcodes) * brange + (
+        buckets.astype(np.int64) - bmin
+    )
+    offs = np.concatenate([[0], np.flatnonzero(np.diff(key)) + 1, [len(key)]])
+    g_starts = offs[:-1]
     return _encode_groups(
-        pa.array([pend["term"]]),
-        pa.array([pend["field"]]),
-        np.array([pend["bucket"]]),
-        np.array([0, len(pend["ids"])], dtype=np.int64),
-        pend["ids"],
-        pend["tfs"],
-        pend["dls"],
+        terms.take(pa.array(g_starts)),
+        pc.take(
+            pa.array(field_names, type=pa.string()),
+            pa.array(fcodes[g_starts], type=pa.int64()),
+        ),
+        buckets[g_starts],
+        offs,
+        ids,
+        tfs,
+        dls,
         cfg,
-        pos_data=pend.get("pdata"),
-        pos_sizes=pend.get("psizes"),
+        pos_data=pdata,
+        pos_sizes=psizes,
     )
 
 
 # ---------------------------------------------------------------------------
-# Packed build path (guide §2.3/§8: the boundary crossings, not the
-# kernels, dominated the build — so cross the boundary with a few
-# binary blob rows instead of tens of millions of flat token rows).
+# Packed build (guide §2.3/§8: the boundary crossings, not the kernels,
+# dominate a Python-in-the-loop build — so cross the boundary with a
+# few binary blob rows instead of tens of millions of flat token rows).
 #
-# The flat pipeline converts every token row JVM→Arrow→Python twice
-# (tokenizer out, encoder in) and Tungsten-sorts the flat rows in
-# between; stage probes at 240k docs showed those conversions + sort
-# at ~13 s of a ~21 s build while the numpy kernels cost <1 s. The
-# packed path keeps the SAME shuffle keys and the SAME encoder
-# arithmetic but moves token rows as serialized Arrow IPC batches:
+# Stage probes at 240k docs put the per-token-row JVM↔Arrow↔Python
+# conversions plus a Tungsten sort of the flat rows at ~13 s of a
+# ~21 s build, while the numpy kernels cost <1 s. The build therefore
+# moves token rows as serialized Arrow IPC batches:
 #
 #   tokenize+pack (mapInArrow over documents)
 #     → (pid int, blob binary) rows, one blob per reduce partition
-#       per input batch — the tokenizer groups its token rows by the
-#       target reduce partition (hash of (term, fcode, bucket), the
-#       exact key set of the flat exchange) and serializes each
-#       group's columnar slice;
+#       per input batch — the tokenizer assigns each token row the
+#       reduce partition of its (term, fcode, bucket) group
+#       (`_group_hash`) and serializes each partition's columnar slice;
 #   Exchange hashpartitioning(pid)
-#     → moves ~n_red blob rows per map task instead of millions of
-#       flat rows (pid values are chosen via _partition_lut so
-#       Spark's own hash routes each logical group to its own reduce
-#       partition — no balls-in-bins collision skew, guide §2.5);
+#     → moves ~n_red blob rows per map task (pid values come from
+#       _partition_lut, so Spark's own hash routes each logical group
+#       to its own reduce partition — no balls-in-bins collision
+#       skew, guide §2.5);
 #   unpack+sort+encode (mapInArrow)
 #     → deserializes the partition's blobs, ONE numpy lexsort on
-#       (dictionary code, fcode, doc_id) replaces the Tungsten sort,
-#       then streams through the SAME `_encode_batches` kernel —
-#       block output is byte-identical to the flat path.
+#       (dictionary code, fcode, doc_id) and one `_encode_sorted`
+#       call per sorted partition.
 #
 # Memory: the unpack stage buffers one reduce partition's token rows
-# (columnar, ~tens of MB at bench scale); partition count scales with
-# cluster parallelism (waves × defaultParallelism), so per-task
-# buffers shrink as the cluster grows — and
-# `spark.golr_loader.build.packed=false` restores the flat
-# Tungsten-sort plan (which spills) for memory-constrained clusters.
+# (columnar, ~tens of MB at bench scale) and spills to 16 group-hash
+# sub-buckets on local disk past the packed_spill_mb threshold (see
+# `_unpack_encode` for the bound). The partition count is
+# _BUILD_WAVES × defaultParallelism, so per-task buffers shrink as
+# the cluster grows.
 # ---------------------------------------------------------------------------
+
+# reduce waves per core: packed reduce tasks are light (numpy sort, no
+# Tungsten sort memory pressure), so the knee is 2 waves (measured at
+# 240k docs / local[32]: builds 7.4 s at 2 vs 8.2 s at 4, and every
+# later query over the persisted block table schedules half the scan
+# tasks)
+_BUILD_WAVES = 2
 
 _PARTITION_LUT_CACHE: dict[int, "np.ndarray"] = {}
 
@@ -430,11 +349,27 @@ _MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 def _mix64(x: np.ndarray) -> np.ndarray:
     """splitmix64 finalizer (public-domain constants) — vectorized
-    uint64 mixing for the pack stage's group→partition spread."""
+    uint64 mixing for `_group_hash`."""
     x = (x + np.uint64(0x9E3779B97F4A7C15)) & _MASK64
     x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & _MASK64
     x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & _MASK64
     return x ^ (x >> np.uint64(31))
+
+
+def _group_hash(
+    term_hash: np.ndarray, fcodes: np.ndarray, buckets: np.ndarray
+) -> np.ndarray:
+    """splitmix64 of a token row's (term, fcode, bucket) group key —
+    ``term_hash`` is the crc32 of the term. The pack stage routes on
+    its low bits (mod the reduce partition count) and the spill router
+    on its top bits, so every row of a group lands in the same reduce
+    partition and, within it, the same spill sub-bucket."""
+    fsalt = (fcodes.astype(np.uint64) + np.uint64(1)) * np.uint64(
+        0x9E3779B97F4A7C15
+    )
+    return _mix64(
+        term_hash ^ fsalt ^ (buckets.astype(np.uint64) * np.uint64(0xBF58476D1CE4E5B9))
+    )
 
 
 def _token_arrow_schema(cfg: IndexConfig) -> pa.schema:
@@ -485,30 +420,22 @@ def _pack_batches(cfg: IndexConfig, n_red: int, lut: np.ndarray) -> "callable":
                 pos, codes, vocab = r["pos"], r["codes"], r["vocab"]
                 tf, dl_rows, cpos = r["tf"], r["dl"], r["cpos"]
                 docs = doc_ids[pos].astype(np.int64)
-                bucket = np.right_shift(docs, shift)
+                fcodes = np.full(len(pos), fi, np.int32)
                 # deterministic per-row reduce target: vocab-level
                 # crc32 of the term (vocab is thousands of entries —
-                # the per-row cost is one integer gather), mixed with
-                # fcode and bucket by splitmix64
+                # the per-row cost is one integer gather)
                 vh = np.fromiter(
                     (crc32(t.encode()) for t in vocab),
                     dtype=np.uint64, count=len(vocab),
                 )
-                fsalt = np.uint64(
-                    ((fi + 1) * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-                )
-                key = _mix64(
-                    vh[codes]
-                    ^ fsalt
-                    ^ (bucket.astype(np.uint64) * np.uint64(0xBF58476D1CE4E5B9))
-                )
+                key = _group_hash(vh[codes], fcodes, np.right_shift(docs, shift))
                 tgt_parts.append((key % np.uint64(n_red)).astype(np.int64))
                 col_parts[0].append(
-                    pa.compute.take(
+                    pc.take(
                         pa.array(vocab, type=pa.string()), pa.array(codes)
                     )
                 )
-                col_parts[1].append(pa.array(np.full(len(pos), fi, np.int32)))
+                col_parts[1].append(pa.array(fcodes))
                 col_parts[2].append(pa.array(docs))
                 col_parts[3].append(pa.array(tf.astype(np.int32)))
                 col_parts[4].append(pa.array(dl_rows))
@@ -524,7 +451,7 @@ def _pack_batches(cfg: IndexConfig, n_red: int, lut: np.ndarray) -> "callable":
             order = np.argsort(tgt)
             take = pa.array(order)
             cols = [
-                pa.compute.take(
+                pc.take(
                     part[0] if len(part) == 1 else pa.concat_arrays(part), take
                 )
                 for part in col_parts
@@ -561,7 +488,7 @@ def _sort_token_batches(
     terms = tbl.column(0).chunk(0) if tbl.column(0).num_chunks else None
     if terms is None or len(terms) == 0:
         return None
-    tcodes = pa.compute.dictionary_encode(terms).indices.to_numpy(
+    tcodes = pc.dictionary_encode(terms).indices.to_numpy(
         zero_copy_only=False
     ).astype(np.int64)
     fcodes = tbl.column(1).chunk(0).to_numpy(zero_copy_only=False)
@@ -569,62 +496,82 @@ def _sort_token_batches(
     order = np.lexsort((docs, fcodes, tcodes))
     take = pa.array(order)
     return pa.RecordBatch.from_arrays(
-        [pa.compute.take(tbl.column(i).chunk(0), take)
+        [pc.take(tbl.column(i).chunk(0), take)
          for i in range(tbl.num_columns)],
         schema=schema,
     )
 
 
-_SPILL_BUCKETS = 16
+_SPILL_BITS = 4
+_SPILL_BUCKETS = 1 << _SPILL_BITS
+
+
+def _spill_route(b: pa.RecordBatch, shift: np.int64) -> np.ndarray:
+    """Spill sub-bucket of each token row, from the top _SPILL_BITS bits
+    of its full (term, fcode, bucket) `_group_hash`: a group never
+    spans sub-buckets, and one hot term's buckets still spread over all
+    of them. The term crc32 is computed per vocabulary entry, so the
+    per-row cost is one integer gather (same pattern as the pack
+    stage)."""
+    from zlib import crc32
+
+    d = pc.dictionary_encode(b.column(0))
+    codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    vh = np.fromiter(
+        (crc32(t.encode()) for t in d.dictionary.to_pylist()),
+        dtype=np.uint64, count=len(d.dictionary),
+    )
+    fcodes = b.column(1).to_numpy(zero_copy_only=False)
+    buckets = np.right_shift(b.column(2).to_numpy(zero_copy_only=False), shift)
+    key = _group_hash(vh[codes], fcodes, buckets)
+    return (key >> np.uint64(64 - _SPILL_BITS)).astype(np.int64)
 
 
 def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
     """mapInArrow stage: (pid, blob) rows of one reduce partition →
     postings blocks. Deserializes the blobs, sorts with ONE numpy
-    lexsort (`_sort_token_batches`), then streams the sorted rows
-    through the same `_encode_batches` kernel as the flat path.
+    lexsort (`_sort_token_batches`) and encodes the sorted partition
+    with `_encode_sorted`.
 
     **Bounded memory (external-bucket spill).** When the partition's
-    buffered token bytes exceed ``spill_bytes`` (>0), rows are routed
-    into ``_SPILL_BUCKETS`` term-hash sub-bucket files on local disk
-    (Arrow IPC streams). A term's rows always share a sub-bucket, so
-    sub-buckets partition the (term, fcode, bucket) group space —
-    and since block content never depends on the order of distinct
-    groups within a reduce partition, sorting + encoding the
-    sub-buckets ONE AT A TIME yields the byte-identical block table
-    with peak memory ~ partition/``_SPILL_BUCKETS`` instead of the
-    whole partition (the packed analog of the flat path's Tungsten
-    spill; parity gated by tests/test_packed_spill.py)."""
+    buffered token bytes reach ``spill_bytes`` (>0), the buffer and
+    every later blob are routed into ``_SPILL_BUCKETS`` sub-bucket
+    files on local disk (Arrow IPC streams), keyed by the hash of the
+    full (term, fcode, bucket) group (`_spill_route`). Sub-buckets
+    therefore partition the group space, and since block content never
+    depends on the order of distinct groups within a reduce partition,
+    sorting + encoding them ONE AT A TIME yields the byte-identical
+    block table (parity gated by tests/test_packed_spill.py).
+
+    Peak token memory is about ``spill_bytes`` plus one blob while
+    buffering, then the largest sub-bucket: ~1/16 of the partition's
+    token bytes when its groups hash evenly, and never less than its
+    largest single group, which holds at most ``n_docs /
+    2**bucket_bits`` postings of one term — a term in every document
+    spreads its ``2**bucket_bits`` groups over the sub-buckets instead
+    of filling one. Spill files and their writers are closed and the
+    spill directory removed on every exit, including a failure mid-
+    spill."""
     schema = _token_arrow_schema(cfg)
-    encode = _encode_batches(cfg)
+    shift = np.int64(max(0, cfg.id_space_bits - cfg.bucket_bits))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import contextlib
         import os
         import shutil
         import tempfile
-        from zlib import crc32
 
         parts: list[pa.RecordBatch] = []
         nbytes = 0
         spill_dir: str | None = None
         writers: list = []
-        files: list = []
 
         def _route(b: pa.RecordBatch) -> None:
-            # vocab-level term hashing (same pattern as _pack_batches):
-            # per-row cost is one integer gather, not a per-row crc32
-            d = pa.compute.dictionary_encode(b.column(0))
-            codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            vocab = d.dictionary.to_pylist()
-            vh = np.fromiter(
-                (crc32(t.encode()) % _SPILL_BUCKETS for t in vocab),
-                dtype=np.int64, count=len(vocab),
-            )
-            tgt = vh[codes]
+            tgt = _spill_route(b, shift)
             order = np.argsort(tgt)
             take = pa.array(order)
             srb = pa.RecordBatch.from_arrays(
-                [pa.compute.take(b.column(i), take)
+                [pc.take(b.column(i), take)
                  for i in range(b.num_columns)],
                 schema=schema,
             )
@@ -636,14 +583,20 @@ def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
                 writers[int(st[s])].write_batch(srb.slice(int(s), int(e - s)))
 
         try:
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                for blob in rb.column(1):
-                    b = pa.ipc.read_record_batch(
-                        pa.py_buffer(blob.as_py()), schema
-                    )
-                    if spill_dir is None:
+            # spill writers + files close when this block exits, by
+            # any path — before the sub-buckets are read back, or on a
+            # failure mid-spill
+            with contextlib.ExitStack() as spill_files:
+                for rb in batches:
+                    if rb.num_rows == 0:
+                        continue
+                    for blob in rb.column(1):
+                        b = pa.ipc.read_record_batch(
+                            pa.py_buffer(blob.as_py()), schema
+                        )
+                        if spill_dir is not None:
+                            _route(b)
+                            continue
                         parts.append(b)
                         nbytes += b.nbytes
                         if spill_bytes and nbytes >= spill_bytes:
@@ -658,39 +611,27 @@ def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
                                 prefix="golr_spill_", dir=base
                             )
                             for i in range(_SPILL_BUCKETS):
-                                fh = open(
-                                    os.path.join(spill_dir, f"b{i}.arrow"), "wb"
+                                fh = spill_files.enter_context(
+                                    open(os.path.join(spill_dir, f"b{i}.arrow"), "wb")
                                 )
-                                files.append(fh)
                                 writers.append(pa.ipc.new_stream(fh, schema))
+                                spill_files.callback(writers[-1].close)
                             for p in parts:
                                 _route(p)
                             parts = []
-                    else:
-                        _route(b)
             if spill_dir is None:
                 srb = _sort_token_batches(parts, schema)
                 if srb is not None:
-                    yield from encode(iter([srb]))
+                    yield _encode_sorted(srb, cfg)
                 return
-            for w in writers:
-                w.close()
-            for fh in files:
-                fh.close()
-
-            def _sorted_subbuckets() -> Iterator[pa.RecordBatch]:
-                for i in range(_SPILL_BUCKETS):
-                    path = os.path.join(spill_dir, f"b{i}.arrow")
-                    with pa.ipc.open_stream(path) as rd:
-                        sub = list(rd)
-                    srb = _sort_token_batches(sub, schema)
-                    if srb is not None:
-                        # sub-buckets never share a (term, fcode)
-                        # group, so the encoder's pending-group
-                        # carryover flushes naturally at boundaries
-                        yield srb
-
-            yield from encode(_sorted_subbuckets())
+            for i in range(_SPILL_BUCKETS):
+                with pa.ipc.open_stream(
+                    os.path.join(spill_dir, f"b{i}.arrow")
+                ) as rd:
+                    sub = list(rd)
+                srb = _sort_token_batches(sub, schema)
+                if srb is not None:
+                    yield _encode_sorted(srb, cfg)
         finally:
             if spill_dir is not None:
                 shutil.rmtree(spill_dir, ignore_errors=True)
@@ -702,36 +643,23 @@ def build_postings_packed(
     documents: DataFrame,
     cfg: IndexConfig | None = None,
 ) -> DataFrame:
-    """documents → postings via the packed boundary (see the section
-    comment above). Same reduce-key set, same encoder, byte-identical
-    blocks; the exchange moves ~n_red blob rows per map task instead
-    of every token row, and the Tungsten sort disappears into one
-    numpy lexsort per reduce task."""
+    """documents(doc_id, <cfg.fields>) → compressed block-max postings,
+    the engine's one index builder (see the section comment above).
+
+    The exchange uses _BUILD_WAVES × defaultParallelism reduce
+    partitions, floored by ``spark.sql.shuffle.partitions``. The one
+    option, ``spark.golr_loader.build.packed_spill_mb`` (default 1024;
+    0 disables), is the unpack stage's spill threshold: it never trips
+    at bench scale (~25 MB per reduce partition at 240k docs / 64
+    partitions) but bounds a pathological partition's memory on
+    memory-constrained deployments."""
     cfg = cfg or IndexConfig()
     spark = documents.sparkSession
-    # packed reduce tasks are light (numpy sort, no Tungsten sort
-    # memory pressure), so the knee is 2 waves, not the flat path's 4
-    # (measured at 240k/local[32]: builds 7.4 s @2 vs 8.2 s @4, and
-    # every later query over the persisted block table schedules half
-    # the scan tasks). Same scale-adaptive form: waves ×
-    # defaultParallelism, floored by spark.sql.shuffle.partitions.
-    waves = int(
-        spark.conf.get(
-            "spark.golr_loader.build.packed_waves",
-            spark.conf.get("spark.golr_loader.build.waves", "2"),
-        )
-    )
     n_red = max(
-        spark.sparkContext.defaultParallelism * waves,
+        spark.sparkContext.defaultParallelism * _BUILD_WAVES,
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
     )
     lut = _partition_lut(spark, n_red)
-    # external-bucket spill threshold for the unpack stage (MB; 0
-    # disables). Default 1024: never trips at bench scale (~25 MB per
-    # reduce partition at 240k docs / 64 partitions) but bounds a
-    # pathological partition's memory to ~1/16th of its token bytes
-    # on memory-constrained deployments without falling all the way
-    # back to the flat Tungsten plan.
     spill_mb = float(
         spark.conf.get("spark.golr_loader.build.packed_spill_mb", "1024")
     )
@@ -747,112 +675,14 @@ def build_postings_packed(
     )
     if cfg.positions:
         spark_schema += ", poss binary"
-    return (
-        packed.repartition(n_red, F.col("pid"))
-        .mapInArrow(_unpack_encode(cfg, spill_bytes), spark_schema)
-        .withColumn("segment", F.lit(0))
-    )
-
-
-def build_postings(
-    tokens: DataFrame,
-    cfg: IndexConfig | None = None,
-) -> DataFrame:
-    """tokens(doc_id, field, term, tf, dl) → compressed block-max
-    postings.
-
-    Plan: hash-repartition flat token rows on (term, fcode,
-    bucket-of(doc_id)) — the bucket is hashed as an inline expression
-    and the field travels as an int code, so the exchange rows are
-    (term, fcode, doc_id, tf, dl[, positions]) only — then Tungsten-
-    sort within partitions on (term, fcode, doc_id) (bucket is
-    monotone in doc_id, so this equals the (term, field, bucket,
-    doc_id) order the encoder needs), and stream through the
-    Arrow-native block encoder, which re-derives buckets with one
-    vectorized shift. This is the engine's only wide shuffle, it
-    moves flat columnar rows (never materialized lists — a
-    collect_list of a hot term would be a single giant JVM row, the
-    classic skew OOM), and the bucket key bounds per-group work to
-    ≤ n_docs / 2**bucket_bits postings regardless of term hotness.
-    The encoder needs no corpus statistic, so the lineage tokenize →
-    shuffle → encode is one unbroken job — no stats barrier in the
-    middle.
-
-    Shuffle sizing: the exchange uses an EXPLICIT partition count of
-    ``spark.golr_loader.build.waves`` (default 4) × the session's
-    defaultParallelism, floored by ``spark.sql.shuffle.partitions`` —
-    multi-wave, scale-adaptive, never a local constant. With exactly
-    one task per core a stage's wall is the max over concurrent
-    tasks, so reduce-key imbalance and node slowdowns amplify with
-    cluster width; a few waves per core lets fast cores absorb
-    stragglers and keeps per-task sorts in executor memory (measured
-    at 240k docs / local[32]: 1 wave 32.6s base / 46.0s positional,
-    4 waves 21.3 / 24.9).
-    """
-    cfg = cfg or IndexConfig()
-
-    tk = tokens
-    if "dl" not in tk.columns:
-        tk = tk.join(doc_lengths(tokens), on=["doc_id", "field"])
-
-    positional = cfg.positions and "positions" in tk.columns
-    # Shuffle-row diet (guide §2.3): the exchange carries (term,
-    # fcode:int, doc_id, tf, dl[, positions]) — the field STRING is
-    # replaced by its integer position in cfg.fields and the bucket
-    # is not shipped at all (it is a monotone function of doc_id; the
-    # partitioner hashes the inline expression and the encoder
-    # re-derives it with one vectorized shift). Because bucket is
-    # monotone in doc_id, sorting by (term, fcode, doc_id) yields the
-    # exact same contiguous (term, field, bucket, doc_id-ascending)
-    # runs the encoder needs.
-    field_names = list(cfg.fields)
-    if "fcode" in tk.columns:
-        # tokenize(field_codes=True) already emitted the int code —
-        # no string column ever existed on this path
-        fcode = F.col("fcode")
-    else:
-        fcode = F.lit(None).cast("int")
-        for i in range(len(field_names) - 1, -1, -1):
-            fcode = F.when(F.col("field") == field_names[i], F.lit(i)).otherwise(
-                fcode
-            )
-    cols = [F.col("term"), fcode.alias("_fc"), F.col("doc_id"),
-            F.col("tf"), F.col("dl")]
-    if positional:
-        cols.append(F.col("positions"))
-    spark = tk.sparkSession
-    # Multi-wave reduce sizing, scale-adaptive: a few waves per core
-    # lets fast cores absorb stragglers (see docstring); derived from
-    # the session's parallelism/shuffle config, never a constant.
-    # measured at 240k docs / local[32]: 1 wave 32.6s base / 46.0s
-    # positional, 2 waves 22.1/32.7, 4 waves 21.3/24.9, 8 waves
-    # 20.7/25.4 — 4 is the knee (stragglers absorbed, per-task sorts
-    # smaller) and stays sane at cluster scale (reduce partitions =
-    # 4× total cores, with shuffle.partitions as the floor)
-    waves = int(spark.conf.get("spark.golr_loader.build.waves", "4"))
-    n_red = max(
-        spark.sparkContext.defaultParallelism * waves,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
-    bucket_expr = bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits)
-    flat = (
-        tk.select(*cols)
-        .repartition(n_red, F.col("term"), F.col("_fc"), bucket_expr)
-        .sortWithinPartitions("term", "_fc", "doc_id")
-    )
-    spark_schema = (
-        "term string, field string, bucket int, block_id int, n int, "
-        "doc_id_first long, doc_ids binary, tfs binary, dls binary, "
-        "max_tf int, min_dl int, tf_sum long"
-    )
-    if positional:
-        spark_schema += ", poss binary"
     # segment 0 = the base build. Fast upserts append blocks under
     # higher segment numbers; per-segment liveDocs (bm25._norm_excl)
     # kill only the superseded copies. Compaction folds everything
     # back to segment 0.
-    return flat.mapInArrow(_encode_batches(cfg), spark_schema).withColumn(
-        "segment", F.lit(0)
+    return (
+        packed.repartition(n_red, F.col("pid"))
+        .mapInArrow(_unpack_encode(cfg, spill_bytes), spark_schema)
+        .withColumn("segment", F.lit(0))
     )
 
 
@@ -913,7 +743,7 @@ def build_index(
 ) -> InvertedIndex:
     """documents → in-memory InvertedIndex (no persistence).
 
-    ONE pass over the corpus: tokenize → shuffle → encode, with the
+    ONE pass over the corpus (`build_postings_packed`), with the
     compact block table persisted (postings are ~50× smaller than the
     flat tokens the round-1 design persisted). avgdl and term_stats
     are aggregations over that block table, not extra corpus passes —
@@ -925,20 +755,9 @@ def build_index(
     from pyspark import StorageLevel
 
     cfg = cfg or IndexConfig()
-    spark = documents.sparkSession
-    packed = (
-        spark.conf.get("spark.golr_loader.build.packed", "true").lower()
-        == "true"
+    postings = build_postings_packed(documents, cfg).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    if packed:
-        # default: the packed-boundary plan (blob exchange + in-encoder
-        # sort — see build_postings_packed); flat Tungsten-sort plan
-        # stays available for memory-constrained clusters
-        postings = build_postings_packed(documents, cfg)
-    else:
-        tokens = tokenize(documents, cfg, field_codes=True)
-        postings = build_postings(tokens, cfg)
-    postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
     if n_docs is None:
         n_docs = documents.count()  # ids unique by construction
     return InvertedIndex(

@@ -42,6 +42,7 @@ from golr_loader_spark.functions.codec import varint_decode
 from golr_loader_spark.plans.build_index import (
     InvertedIndex,
     _encode_groups,
+    build_postings_packed,
     derived_stats,
     derived_term_stats,
 )
@@ -298,12 +299,7 @@ def upsert_docs(
     doc_id-sorted lists."""
     import shutil
 
-    from golr_loader_spark.functions.tokenize import tokenize
-    from golr_loader_spark.plans.build_index import (
-        build_postings,
-        read_index,
-        write_index,
-    )
+    from golr_loader_spark.plans.build_index import read_index, write_index
 
     cfg = cfg or IndexConfig()
     docs_path = f"{root}/docs"
@@ -346,7 +342,7 @@ def upsert_docs(
     )
     from pyspark import StorageLevel
 
-    fresh = build_postings(tokenize(documents, cfg), cfg)
+    fresh = build_postings_packed(documents, cfg)
     merged = base.unionByName(fresh).persist(StorageLevel.MEMORY_AND_DISK)
     merged.count()  # materialize once: 3 table writes + stats reuse it
     n_docs = ix.n_docs - len(existing_ids) + n_incoming
@@ -639,9 +635,6 @@ def upsert_docs_fast(
     data loss. Stats writes are last and swap atomically."""
     import shutil
 
-    from golr_loader_spark.functions.tokenize import tokenize
-    from golr_loader_spark.plans.build_index import build_postings
-
     cfg = cfg or IndexConfig()
     docs_path = f"{root}/docs"
     if not os.path.isdir(docs_path):
@@ -668,7 +661,7 @@ def upsert_docs_fast(
     from pyspark import StorageLevel
 
     fresh = (
-        build_postings(tokenize(documents, cfg), cfg)
+        build_postings_packed(documents, cfg)
         .withColumn("segment", F.lit(new_seg))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -11,16 +11,19 @@ lineage + metrics").
 
 Two checkpointed phases, each a set of independent idempotent splits:
 
-* **Phase A — tokenize** (one pass over the corpus, per doc-split):
-  documents filtered by ``pmod(doc_id, n_doc_splits)`` → tokens with
-  doc length and bucket attached → parquet under
-  ``tokens/split=S/bucket=B``. Lineage: rows in/out, a corpus
-  sha256-derived checksum (the per-row content-sha invariant rolled
-  up per split), wall ms.
-* **Phase B — postings** (per contiguous bucket-group): reads only
-  the ``bucket=B`` directories of its group (partition pruning — no
-  re-scan of the corpus, no re-tokenize), builds compressed block-max
-  postings, writes ``postings/group=G``.
+* **Phase A — lineage** (per doc-split, manifest phase name
+  ``tokenize``): documents filtered by ``pmod(doc_id, n_doc_splits)``
+  → rows in and a corpus sha256-derived checksum (the per-row
+  content-sha invariant rolled up per split), wall ms. Nothing is
+  written but the manifest row; ``verify_lineage`` re-derives these
+  checksums from the source. The phase name predates the single-pass
+  build and is kept so existing manifests still resume and verify.
+* **Phase B — postings** (per contiguous bucket-group): the documents
+  whose doc bucket falls in the group go through the engine's one
+  builder (``build_postings_packed``) → ``postings/group=G``. A
+  (term, field, bucket) block group lies in exactly one bucket group,
+  so the union of the group tables is byte-identical to a one-shot
+  build.
 
 A crash between a split's data write and its manifest append simply
 re-runs that split; the data write is a directory overwrite, so the
@@ -38,11 +41,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from golr_loader_spark.config import IndexConfig
-from golr_loader_spark.functions.tokenize import tokenize
 from golr_loader_spark.plans.build_index import (
     InvertedIndex,
     bucket_of,
-    build_postings,
+    build_postings_packed,
 )
 
 MANIFEST_SCHEMA = (
@@ -136,7 +138,7 @@ def build_index_checkpointed(
         if stop_after_commits is not None and commits >= stop_after_commits:
             raise StopBuild(f"injected stop after {commits} commits")
 
-    # ---- Phase A: tokenize per doc-split --------------------------------
+    # ---- Phase A: lineage per doc-split ---------------------------------
     for s in range(n_doc_splits):
         if prog.done("tokenize", s):
             continue
@@ -147,28 +149,19 @@ def build_index_checkpointed(
             F.count("*").alias("n"),
             F.coalesce(F.sum(F.crc32(F.col("content_sha256"))), F.lit(0)).alias("ck"),
         ).collect()[0]
-        toks = tokenize(sub, cfg).withColumn(
-            "bucket", bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits)
-        )
-        out = f"{root}/tokens/split={s}"
-        toks.write.mode("overwrite").partitionBy("bucket").parquet(out)
-        n_out = spark.read.parquet(out).count()
         _append_manifest(
-            spark, root, "tokenize", s, int(agg["n"]), n_out, int(agg["ck"]),
+            spark, root, "tokenize", s, int(agg["n"]), -1, int(agg["ck"]),
             int((time.perf_counter() - t0) * 1000),
         )
         commit_gate()
 
     # ---- Phase B: postings per bucket-group ------------------------------
-    groups = _bucket_groups(cfg, n_bucket_groups)
-    for g, buckets in enumerate(groups):
+    bucket = bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits)
+    for g, buckets in enumerate(_bucket_groups(cfg, n_bucket_groups)):
         if prog.done("postings", g):
             continue
         t0 = time.perf_counter()
-        toks_g = spark.read.option("basePath", f"{root}/tokens").parquet(
-            f"{root}/tokens/split=*"
-        ).filter(F.col("bucket").isin(buckets))
-        postings = build_postings(toks_g.drop("split"), cfg)
+        postings = build_postings_packed(documents.filter(bucket.isin(buckets)), cfg)
         out = f"{root}/postings/group={g}"
         (
             postings.repartitionByRange(4, "term")
@@ -178,8 +171,7 @@ def build_index_checkpointed(
             .option("parquet.block.size", str(4 << 20))
             .parquet(out)
         )
-        # term stats derive from the just-written block table — no
-        # second scan of the (much larger) token files
+        # term stats derive from the just-written block table
         from golr_loader_spark.plans.build_index import derived_term_stats
 
         tstats = derived_term_stats(spark.read.parquet(out))

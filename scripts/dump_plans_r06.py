@@ -21,9 +21,8 @@ def main() -> None:
 
     from golr_loader_spark.config import IndexConfig
     from golr_loader_spark.corpus import synth_corpus
-    from golr_loader_spark.functions.tokenize import tokenize
     from golr_loader_spark.operators.relational import QUERIES
-    from golr_loader_spark.plans.build_index import build_postings
+    from golr_loader_spark.plans.build_index import build_postings_packed
     from golr_loader_spark.plans.documents import (
         assign_dense_ids,
         flatten_documents,
@@ -56,18 +55,8 @@ def main() -> None:
     cfgp = IndexConfig(
         bucket_bits=5, id_space_bits=max(2, (n - 1).bit_length()), positions=True
     )
-    dump("index_build_postings", build_postings(tokenize(dd, cfg), cfg))
-    dump("index_build_postings_positional",
-         build_postings(tokenize(dd, cfgp), cfgp))
-    # packed-boundary build (round-6 second batch): present only in
-    # trees that carry build_postings_packed
-    try:
-        from golr_loader_spark.plans.build_index import build_postings_packed
-    except ImportError:
-        build_postings_packed = None
-    if build_postings_packed is not None:
-        dump("index_build_packed", build_postings_packed(dd, cfg))
-        dump("index_build_packed_positional", build_postings_packed(dd, cfgp))
+    dump("index_build_packed", build_postings_packed(dd, cfg))
+    dump("index_build_packed_positional", build_postings_packed(dd, cfgp))
     spark.stop()
 
 

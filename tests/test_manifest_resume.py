@@ -24,6 +24,10 @@ def docs(spark):
     return flatten_documents(synth_corpus(spark, 300, seed=42)).cache()
 
 
+def _rows(df, cols):
+    return sorted(tuple(r) for r in df.select(cols).collect())
+
+
 def _topk(ix, q="def return zq0042", k=10):
     return [(r["doc_id"], r["score"]) for r in search(ix, q, k=k).collect()]
 
@@ -75,6 +79,9 @@ def test_kill_and_resume_on_dense_ids(spark, docs, tmp_path):
     ix = build_index_checkpointed(ddocs, root, cfg, n_doc_splits=2, n_bucket_groups=2)
     one_shot = build_index(ddocs, cfg)
     assert _topk(ix) == _topk(one_shot)
+    # per-bucket-group builds reassemble the one-shot block table
+    cols = one_shot.postings.columns
+    assert _rows(ix.postings, cols) == _rows(one_shot.postings, cols)
     assert verify_lineage(ddocs, spark, root)
     # dense ids really are dense: contiguous 0..N-1
     ids = [r["doc_id"] for r in ddocs.select("doc_id").collect()]

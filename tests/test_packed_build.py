@@ -1,21 +1,21 @@
 """Packed-boundary build path (plans.build_index.build_postings_packed):
 the blob-exchange plan must produce the EXACT block table of the flat
-tokenize→shuffle→sort→encode plan — base, positional, and hash-id
-(sparse bucket) corpora — and build_index must route through it by
-default with the flat plan still reachable via conf.
+tokenize→shuffle→sort→encode reference plan (tests/flat_reference.py)
+— base, positional, and hash-id (sparse bucket) corpora — and
+build_index must produce that same table.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from flat_reference import build_postings_flat
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.corpus import synth_corpus
-from golr_loader_spark.functions.tokenize import tokenize
 from golr_loader_spark.plans.build_index import (
     build_index,
-    build_postings,
     build_postings_packed,
+    derived_term_stats,
 )
 from golr_loader_spark.plans.documents import assign_dense_ids, flatten_documents
 
@@ -43,7 +43,7 @@ def test_packed_equals_flat_dense(spark, dense, positional):
         id_space_bits=max(2, (N - 1).bit_length()),
         positions=positional,
     )
-    flat = build_postings(tokenize(dense, cfg, field_codes=True), cfg)
+    flat = build_postings_flat(dense, cfg)
     packed = build_postings_packed(dense, cfg)
     cols = flat.columns
     assert _rows(packed, cols) == _rows(flat, cols)
@@ -54,24 +54,19 @@ def test_packed_equals_flat_hash_ids(spark, docs):
     # sparse id space — exercises the packed path's bucket/pid math
     # away from the dense fast case
     cfg = IndexConfig(bucket_bits=5, id_space_bits=64)
-    flat = build_postings(tokenize(docs, cfg, field_codes=True), cfg)
+    flat = build_postings_flat(docs, cfg)
     packed = build_postings_packed(docs, cfg)
     cols = flat.columns
     assert _rows(packed, cols) == _rows(flat, cols)
 
 
-def test_build_index_conf_routes_both_paths(spark, dense):
+def test_build_index_equals_flat_reference(spark, dense):
     cfg = IndexConfig(bucket_bits=4, id_space_bits=max(2, (N - 1).bit_length()))
-    ix_packed = build_index(dense, cfg, n_docs=N)
-    try:
-        spark.conf.set("spark.golr_loader.build.packed", "false")
-        ix_flat = build_index(dense, cfg, n_docs=N)
-    finally:
-        spark.conf.set("spark.golr_loader.build.packed", "true")
-    cols = ix_flat.postings.columns
-    assert _rows(ix_packed.postings, cols) == _rows(ix_flat.postings, cols)
-    ts = sorted(tuple(r) for r in ix_packed.term_stats.collect())
-    ts2 = sorted(tuple(r) for r in ix_flat.term_stats.collect())
+    ix = build_index(dense, cfg, n_docs=N)
+    flat = build_postings_flat(dense, cfg)
+    cols = flat.columns
+    assert _rows(ix.postings, cols) == _rows(flat, cols)
+    ts = sorted(tuple(r) for r in ix.term_stats.collect())
+    ts2 = sorted(tuple(r) for r in derived_term_stats(flat).collect())
     assert ts == ts2
-    ix_packed.postings.unpersist()
-    ix_flat.postings.unpersist()
+    ix.postings.unpersist()
